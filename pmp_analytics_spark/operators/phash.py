@@ -50,7 +50,6 @@ BMP/PNG/JPEG/GIF/WebP codecs (``multimodal.py``, ``jpeg.py``,
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -144,33 +143,6 @@ def decode_pixels_bgr(payload: bytes) -> tuple[int, int, list[bytes]]:
         except ValueError as e:
             errs.append(str(e))
     raise ValueError(f"no stdlib codec decodes this payload ({'; '.join(errs)})")
-
-
-def phash_frame(df: DataFrame, payload_col: str, id_col: str) -> DataFrame:
-    """``(id, phash)`` for every binary image payload: decode (stdlib
-    codecs, WebP rows normalized) -> ``phash64_bgr`` inside one Arrow
-    ``mapInPandas`` pass. Undecodable payloads are DROPPED (the quality/
-    quarantine operators own triage); the hash column is a plain BIGINT
-    so the pair stage never ships pixels."""
-    import pandas as pd
-
-    from pmp_analytics_spark.operators.partitioning import ensure_parallelism
-
-    src = ensure_parallelism(df.select(F.col(id_col), F.col(payload_col)))
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            ids, hashes = [], []
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    w, h, rows = decode_pixels_bgr(bytes(payload))
-                    hashes.append(phash64_bgr(w, h, rows))
-                    ids.append(rid)
-                except ValueError:
-                    continue
-            yield pd.DataFrame({id_col: ids, "phash": pd.array(hashes, dtype="int64")})
-
-    return src.mapInPandas(batches, schema=f"{id_col} long, phash long")
 
 
 def phash_band_rows(

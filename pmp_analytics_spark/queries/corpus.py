@@ -30,6 +30,7 @@ from pmp_analytics_spark.functions.text import (
     word_ngrams,
 )
 from pmp_analytics_spark.operators.partitioning import ensure_parallelism
+from pmp_analytics_spark.session import session_memo
 from pmp_analytics_spark.sources.reader import load_table
 
 
@@ -1302,9 +1303,6 @@ def _clf_oracle() -> str:
     )
 
 
-_CLF_FIT_MEMO: dict = {}
-
-
 def _clf_labels(docs: DataFrame) -> DataFrame:
     return docs.select(
         "doc_id",
@@ -1313,18 +1311,16 @@ def _clf_labels(docs: DataFrame) -> DataFrame:
 
 
 def _clf_fit(spark: SparkSession, sf_dir: str) -> list[float]:
-    """The trained weight vector, memoized per (session, sf_dir) — the
-    in-session model of the classifier artifact a deployment trains once
-    and ships (same contract as the memoized BPE fit): the batch
-    confusion query and the streaming scorer share ONE fit."""
+    """The trained weight vector, memoized per sf_dir with
+    ``session_memo`` — the in-session model of the classifier artifact a
+    deployment trains once and ships: the batch confusion query and the
+    streaming scorer share ONE fit."""
     from pmp_analytics_spark.operators.classifier import (
         fit_logistic,
         hashed_features,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CLF_FIT_MEMO.get(key)
-    if hit is None:
+    def build() -> list[float]:
         docs = _docs_parallel(spark, sf_dir)
         labels = _clf_labels(docs)
         # class weights via the 1-row-agg broadcast-crossJoin pattern
@@ -1352,7 +1348,7 @@ def _clf_fit(spark: SparkSession, sf_dir: str) -> list[float]:
         feats = hashed_features(
             docs, "text", "doc_id", _CLF_DIM, binary=True
         ).cache()
-        hit = fit_logistic(
+        w = fit_logistic(
             spark,
             feats,
             weighted,
@@ -1364,15 +1360,9 @@ def _clf_fit(spark: SparkSession, sf_dir: str) -> list[float]:
         )
         feats.unpersist()
         weighted.unpersist()
-        _CLF_FIT_MEMO[key] = hit
-    return hit
+        return w
 
-
-def clear_clf_fit() -> None:
-    """Drop every memoized classifier fit (see ``_clf_fit``) — the same
-    invalidation contract as ``pretrain.clear_bpe_fit``: callers that
-    rewrite documents at an sf_dir within one session must call this."""
-    _CLF_FIT_MEMO.clear()
+    return session_memo(spark, ("clf_fit", sf_dir), build)
 
 
 @query("docs_quality_classifier", _clf_oracle())

@@ -23,6 +23,7 @@ from pmp_analytics_spark.functions.text import (
 )
 from pmp_analytics_spark.operators.dedup import minhash_lsh_candidates, ngram_jaccard_dedup
 from pmp_analytics_spark.operators.similarity_search import brute_force_topk
+from pmp_analytics_spark.session import session_memo
 from pmp_analytics_spark.sources.reader import load_table
 
 QUERIES: dict = {}
@@ -336,28 +337,6 @@ def docs_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_INGEST_STORE_MEMO: dict[tuple[str, str], tuple] = {}
-"""Session-scoped memo of the historical bucket store, keyed by
-(applicationId, sf_dir). At deployment the store is PERSISTED state — a
-bucket-store table pair maintained at corpus-ingest time, not rebuilt
-per probe — so within one session the two ingest queries (batch +
-streaming) share one cached build instead of re-deriving the corpus
-explode + signatures each. Entries from a stopped session are inert
-(new sessions get a new applicationId); ``clear_neardup_ingest_store``
-unpersists explicitly for memory-sensitive harnesses."""
-
-
-def clear_neardup_ingest_store() -> None:
-    """Unpersist and drop every memoized ingest store (see
-    ``_INGEST_STORE_MEMO``)."""
-    for _, _, _, keys_h in _INGEST_STORE_MEMO.values():
-        try:
-            keys_h.unpersist()
-        except Exception:  # session already stopped
-            pass
-    _INGEST_STORE_MEMO.clear()
-
-
 def _neardup_ingest_store(spark: SparkSession, sf_dir: str):
     """Shared derivation for the two incremental-ingest queries (batch +
     streaming): the deterministic newest-fifth cut and the history
@@ -369,13 +348,14 @@ def _neardup_ingest_store(spark: SparkSession, sf_dir: str):
     session computes the shingle hashes once for all dedup paths.
 
     The band-key store ``keys_h`` (bands rows per doc — the small,
-    probe-hot state) is cached and memoized per (session, sf_dir) — the
-    in-session model of the persisted bucket-store table the deployment
-    maintains at ingest time. The exploded hash stream ``ex_h`` stays
-    UNCACHED on purpose: it is shingle-count-sized (orders of magnitude
-    larger), the verify stage consumes it exactly once per probe behind
-    a candidate semi-join, and materializing it costs more than the
-    recompute it would save (measured 2x slower at sf0.1).
+    probe-hot state) is cached, and the whole store is memoized per
+    sf_dir with ``session_memo`` — the in-session model of the persisted
+    bucket-store table the deployment maintains at ingest time. The
+    exploded hash stream ``ex_h`` stays UNCACHED on purpose: it is
+    shingle-count-sized (orders of magnitude larger), the verify stage
+    consumes it exactly once per probe behind a candidate semi-join, and
+    materializing it costs more than the recompute it would save
+    (measured 2x slower at sf0.1).
 
     Returns (cut, corpus_ex, ex_h, keys_h); the cut is one scalar agg
     collect — bounded by definition."""
@@ -385,19 +365,17 @@ def _neardup_ingest_store(spark: SparkSession, sf_dir: str):
         minhash_signatures,
     )
 
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _INGEST_STORE_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
-    docs = load_table(spark, sf_dir, "documents")
-    cut = docs.agg(F.max("doc_id")).collect()[0][0] * 4 // 5
-    ex = exploded_shingle_hashes(docs, "text", "doc_id", _SHINGLE_K)
-    ex_h = ex.where(F.col("doc_id") < cut)
-    keys_h = band_key_frame(
-        minhash_signatures(ex_h, "doc_id", len(_SEEDS)), "doc_id", len(_SEEDS), _BANDS
-    ).cache()
-    _INGEST_STORE_MEMO[memo_key] = (cut, ex, ex_h, keys_h)
-    return cut, ex, ex_h, keys_h
+    def build() -> tuple:
+        docs = load_table(spark, sf_dir, "documents")
+        cut = docs.agg(F.max("doc_id")).collect()[0][0] * 4 // 5
+        ex = exploded_shingle_hashes(docs, "text", "doc_id", _SHINGLE_K)
+        ex_h = ex.where(F.col("doc_id") < cut)
+        keys_h = band_key_frame(
+            minhash_signatures(ex_h, "doc_id", len(_SEEDS)), "doc_id", len(_SEEDS), _BANDS
+        ).cache()
+        return cut, ex, ex_h, keys_h
+
+    return session_memo(spark, ("neardup_ingest_store", sf_dir), build)
 
 
 # --------------------------------------------------------------------------
@@ -450,7 +428,6 @@ def streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=_JACCARD_T,
         num_hashes=len(_SEEDS),
         bands=_BANDS,
-        own_cache=False,  # store is the memoized session store — outlives this drain
     )
     schema = StructType(
         [

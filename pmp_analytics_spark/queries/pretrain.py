@@ -25,6 +25,7 @@ from pmp_analytics_spark.functions.text import token_count, tokens
 from pmp_analytics_spark.operators.packing import pack_sequences
 from pmp_analytics_spark.operators.partitioning import ensure_parallelism
 from pmp_analytics_spark.operators.sample import hash_bucket
+from pmp_analytics_spark.session import session_memo
 from pmp_analytics_spark.sources.reader import load_table
 
 
@@ -1218,44 +1219,32 @@ def _bpe_oracle() -> str:
     return _bpe_stage_sql() + "\n    " + finals
 
 
-_BPE_FIT_MEMO: dict = {}
 _BPE_MERGE_SCHEMA = "rank long, lhs string, rhs string, merged string, pair_freq long"
 
 
-def _bpe_fit(spark: SparkSession, sf_dir: str):
-    """The learned merge table, memoized per (session, sf_dir, k): three
-    declared queries (docs_bpe_merges / docs_bpe_encode /
-    docs_tokenize_ids) share ONE tokenizer fit — the in-session model of
-    the merge-table artifact a deployment trains once and ships, same
-    contract as the memoized neardup bucket store (new sessions refit;
-    the k sequential argmax rounds are the fit's irreducible cost).
-    Returns (full merge rows, [(lhs, rhs), ...] in rank order)."""
-    from pmp_analytics_spark.operators.bpe import bpe_learn_merges
+def _merge_fit(spark: SparkSession, sf_dir: str, learn, k: int):
+    """The merge table ``learn(documents, "text", k)`` learns (word-level
+    BPE, byte-level BPE or WordPiece), memoized per (learner, sf_dir, k)
+    with ``session_memo``: every tokenizer query over one corpus shares
+    ONE fit — the in-session model of the merge-table artifact a
+    deployment trains once and ships (the k sequential argmax rounds are
+    the fit's irreducible cost). Returns (full merge rows,
+    [(lhs, rhs), ...] in rank order)."""
 
-    key = (spark.sparkContext.applicationId, sf_dir, _BPE_K)
-    hit = _BPE_FIT_MEMO.get(key)
-    if hit is None:
+    def build() -> tuple:
         docs = load_table(spark, sf_dir, "documents")
-        rows = bpe_learn_merges(docs, "text", _BPE_K).orderBy("rank").collect()
-        hit = (rows, [(r["lhs"], r["rhs"]) for r in rows])
-        _BPE_FIT_MEMO[key] = hit
-    return hit
+        rows = learn(docs, "text", k).orderBy("rank").collect()
+        return rows, [(r["lhs"], r["rhs"]) for r in rows]
 
-
-def clear_bpe_fit() -> None:
-    """Drop every memoized BPE fit (see ``_BPE_FIT_MEMO``). Callers that
-    REWRITE documents at an sf_dir within one session must call this, or
-    the three tokenizer queries keep encoding with the stale merge table
-    while their oracles refit from the new data — the same invalidation
-    contract as ``llm.clear_neardup_ingest_store``."""
-    _BPE_FIT_MEMO.clear()
+    return session_memo(spark, ("merge_fit", learn.__name__, sf_dir, k), build)
 
 
 @query("docs_bpe_merges", _bpe_oracle)
 def docs_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pmp_analytics_spark.operators.bpe import bpe_learn_merges
     from pmp_analytics_spark.sources.local import local_df
 
-    rows, _ = _bpe_fit(spark, sf_dir)
+    rows, _ = _merge_fit(spark, sf_dir, bpe_learn_merges, _BPE_K)
     return local_df(spark, rows, _BPE_MERGE_SCHEMA)
 
 
@@ -1292,12 +1281,13 @@ def _bpe_encode_oracle() -> str:
 def docs_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pmp_analytics_spark.operators.bpe import (
         bpe_apply,
+        bpe_learn_merges,
         bpe_token_stats,
         word_vocab,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    _, rules = _bpe_fit(spark, sf_dir)
+    _, rules = _merge_fit(spark, sf_dir, bpe_learn_merges, _BPE_K)
     applied = bpe_apply(word_vocab(docs, "text"), rules)
     return bpe_token_stats(applied)
 
@@ -1349,34 +1339,12 @@ def _bbpe_oracle() -> str:
     return "WITH " + ",\n    ".join(stages) + "\n    " + finals
 
 
-_BBPE_FIT_MEMO: dict = {}
-
-
-def _bbpe_fit(spark: SparkSession, sf_dir: str):
-    """Byte-level merge table, memoized per (session, sf_dir, k) — the
-    _bpe_fit contract applied to the byte alphabet (docs_bpe_bytelevel
-    and the docs_tokenizer_eval third arm share one fit)."""
-    from pmp_analytics_spark.operators.bpe import bpe_learn_merges_bytes
-
-    key = (spark.sparkContext.applicationId, sf_dir, _BBPE_K)
-    hit = _BBPE_FIT_MEMO.get(key)
-    if hit is None:
-        docs = load_table(spark, sf_dir, "documents")
-        rows = (
-            bpe_learn_merges_bytes(docs, "text", _BBPE_K)
-            .orderBy("rank")
-            .collect()
-        )
-        hit = (rows, [(r["lhs"], r["rhs"]) for r in rows])
-        _BBPE_FIT_MEMO[key] = hit
-    return hit
-
-
 @query("docs_bpe_bytelevel", _bbpe_oracle)
 def docs_bpe_bytelevel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pmp_analytics_spark.operators.bpe import bpe_learn_merges_bytes
     from pmp_analytics_spark.sources.local import local_df
 
-    rows, _ = _bbpe_fit(spark, sf_dir)
+    rows, _ = _merge_fit(spark, sf_dir, bpe_learn_merges_bytes, _BBPE_K)
     return local_df(spark, rows, _BPE_MERGE_SCHEMA)
 
 
@@ -1951,12 +1919,13 @@ def _tokenize_ids_oracle() -> str:
 def docs_tokenize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pmp_analytics_spark.operators.bpe import (
         bpe_apply,
+        bpe_learn_merges,
         bpe_token_stats,
         word_vocab,
     )
 
     docs = _docs_parallel(spark, sf_dir)
-    _, rules = _bpe_fit(spark, sf_dir)
+    _, rules = _merge_fit(spark, sf_dir, bpe_learn_merges, _BPE_K)
     # localCheckpoint: the encoded vocab feeds the driver-side id build
     # (collected below) AND the seg join branch — uncheckpointed, the
     # corpus-wide word_vocab aggregation would run twice per execution
@@ -2717,9 +2686,12 @@ def docs_tokenizer_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pmp_analytics_spark.operators.bpe import (
         apply_merges_to_sym,
         bpe_apply,
+        bpe_learn_merges,
+        bpe_learn_merges_bytes,
         byte_pretoken_vocab,
         byte_symbolized,
         word_vocab,
+        wordpiece_learn_merges,
     )
     from pmp_analytics_spark.operators.unigram import (
         _lp_table,
@@ -2766,7 +2738,7 @@ def docs_tokenizer_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    _, rules = _bpe_fit(spark, sf_dir)
+    _, rules = _merge_fit(spark, sf_dir, bpe_learn_merges, _BPE_K)
     bseg = bpe_apply(wv, rules)
     bpe_subs = F.filter(F.split(F.trim(F.col("sym")), " "), lambda x: x != "")
 
@@ -2783,16 +2755,16 @@ def docs_tokenizer_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     useg = unigram_segment(wv, lp, _UNI_PLEN)
     uni_subs = F.filter(F.split(F.col("seg"), " "), lambda x: x != "")
 
-    _, yrules = _bbpe_fit(spark, sf_dir)
+    _, yrules = _merge_fit(spark, sf_dir, bpe_learn_merges_bytes, _BBPE_K)
     yv = byte_pretoken_vocab(docs, "text")
     yseg = apply_merges_to_sym(byte_symbolized(yv), yrules)
     byte_subs = F.filter(F.split(F.trim(F.col("sym")), " "), lambda x: x != "")
 
     # fourth arm: WordPiece — likelihood-gain merges trained on the full
-    # vocab (the _wp_fit memo), applied through the same merge-replay
+    # vocab (the memoized fit), applied through the same merge-replay
     # path as BPE (merge application is objective-independent), graded
     # on the shared word set
-    _, wrules = _wp_fit(spark, sf_dir)
+    _, wrules = _merge_fit(spark, sf_dir, wordpiece_learn_merges, _WP_K)
     wseg = bpe_apply(wv, wrules)
     wp_subs = F.filter(F.split(F.trim(F.col("sym")), " "), lambda x: x != "")
 
@@ -3302,32 +3274,12 @@ def _wordpiece_oracle() -> str:
     return "WITH " + _wp_stage_sql() + "\n    " + finals
 
 
-_WP_FIT_MEMO: dict = {}
-
-
-def _wp_fit(spark: SparkSession, sf_dir: str):
-    """Memoized WordPiece fit (the ``_bpe_fit`` contract): returns
-    (full merge rows, [(lhs, rhs), ...] in rank order), shared by
-    docs_wordpiece and the tokenizer-eval fourth arm."""
-    from pmp_analytics_spark.operators.bpe import wordpiece_learn_merges
-
-    key = (spark.sparkContext.applicationId, sf_dir, _WP_K)
-    hit = _WP_FIT_MEMO.get(key)
-    if hit is None:
-        docs = load_table(spark, sf_dir, "documents")
-        rows = (
-            wordpiece_learn_merges(docs, "text", _WP_K).orderBy("rank").collect()
-        )
-        hit = (rows, [(r["lhs"], r["rhs"]) for r in rows])
-        _WP_FIT_MEMO[key] = hit
-    return hit
-
-
 @query("docs_wordpiece", _wordpiece_oracle)
 def docs_wordpiece(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pmp_analytics_spark.operators.bpe import wordpiece_learn_merges
     from pmp_analytics_spark.sources.local import local_df
 
-    rows, _ = _wp_fit(spark, sf_dir)
+    rows, _ = _merge_fit(spark, sf_dir, wordpiece_learn_merges, _WP_K)
     return local_df(
         spark,
         rows,
@@ -3424,6 +3376,7 @@ def docs_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         _symbolized,
         word_vocab,
         wordpiece_encode,
+        wordpiece_learn_merges,
         wordpiece_vocab,
     )
 
@@ -3433,7 +3386,7 @@ def docs_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus tokenize+explode (the same two-consumer rule as
     # docs_tokenizer_eval's wv)
     wv = word_vocab(docs, "text").localCheckpoint(eager=False)
-    _, wrules = _wp_fit(spark, sf_dir)
+    _, wrules = _merge_fit(spark, sf_dir, wordpiece_learn_merges, _WP_K)
     vocab = wordpiece_vocab(apply_merges_to_sym(_symbolized(wv), wrules))
     top = (
         wv.where(F.length("word") <= _WPE_MAXW)
@@ -3715,7 +3668,12 @@ def _fertility_oracle() -> str:
 
 @query("docs_tokenizer_fertility_by_lang", _fertility_oracle)
 def docs_tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pmp_analytics_spark.operators.bpe import bpe_apply, word_vocab
+    from pmp_analytics_spark.operators.bpe import (
+        bpe_apply,
+        bpe_learn_merges,
+        word_vocab,
+        wordpiece_learn_merges,
+    )
     from pmp_analytics_spark.operators.unigram import (
         _lp_table,
         unigram_fit,
@@ -3731,8 +3689,8 @@ def docs_tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFr
     ).cache()
     wv = word_vocab(docs, "text").where(F.length("word") <= _UNI_MAXW)
 
-    _, brules = _bpe_fit(spark, sf_dir)
-    _, wrules = _wp_fit(spark, sf_dir)
+    _, brules = _merge_fit(spark, sf_dir, bpe_learn_merges, _BPE_K)
+    _, wrules = _merge_fit(spark, sf_dir, wordpiece_learn_merges, _WP_K)
     pieces = unigram_fit(
         docs,
         "text",

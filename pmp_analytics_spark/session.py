@@ -12,13 +12,65 @@ matter for both local correctness testing and 100 TB cluster runs:
 - shuffle partitions sized to the local core count by default; a real cluster
   deployment overrides via ``spark.sql.shuffle.partitions`` or relies on AQE
   coalescing from a high initial value.
+
+The module also owns the one in-session memo (``session_memo`` /
+``release_session_memo``) for artifacts that several queries share.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import TypeVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+_T = TypeVar("_T")
+
+_SESSION_MEMO: dict[tuple, object] = {}
+"""The one in-session memo of fit-once artifacts (tokenizer merge
+tables, classifier weights, the co-purchase edge set, the neardup
+bucket store, quantizer training samples), keyed by (applicationId,
+*key). At deployment each is built once per corpus version and shipped;
+within a session, every query that needs one shares a single build.
+Entries from a stopped session are inert: a new session gets a new
+applicationId. ``release_session_memo`` is the one release path."""
+
+
+def session_memo(spark: SparkSession, key: tuple, build: Callable[[], _T]) -> _T:
+    """The value memoized under ``key`` for this session, built by
+    ``build()`` on first use. ``key`` starts with a name unique to the
+    caller so memos of different artifacts never collide."""
+    full = (spark.sparkContext.applicationId, *key)
+    if full not in _SESSION_MEMO:
+        _SESSION_MEMO[full] = build()
+    return _SESSION_MEMO[full]
+
+
+def _free_frame(df: DataFrame) -> None:
+    """Drop the block-manager storage behind a memoized frame: the cache
+    of a ``.cache()``d frame, or the checkpointed RDD behind a
+    ``localCheckpoint`` frame's ``LogicalRDD`` (``DataFrame.unpersist``
+    leaves that one held)."""
+    if df.is_cached:
+        df.unpersist(blocking=True)
+    plan = df._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(True)
+
+
+def release_session_memo() -> None:
+    """Drop every memoized entry and free the Spark storage its frames
+    hold. Callers that rewrite a table within one session call this so
+    the next query refits from the new data."""
+    for value in _SESSION_MEMO.values():
+        for v in value if isinstance(value, tuple) else (value,):
+            if isinstance(v, DataFrame):
+                try:
+                    _free_frame(v)
+                except Exception:  # session already stopped
+                    pass
+    _SESSION_MEMO.clear()
 
 
 def default_parallelism() -> int:

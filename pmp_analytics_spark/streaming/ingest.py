@@ -38,7 +38,6 @@ def neardup_ingest_stream(
     threshold: float = 0.7,
     num_hashes: int = 16,
     bands: int = 4,
-    own_cache: bool = True,
 ) -> None:
     """Drain ``batch_stream`` (availableNow) through the batch
     ``neardup_probe`` operator per micro-batch; (id_a = new doc,
@@ -49,20 +48,15 @@ def neardup_ingest_stream(
 
     The bucket store arrives PRECOMPUTED (``history_ex`` exploded hash
     stream + ``history_keys`` band rows — per-corpus state maintained at
-    corpus-ingest time, a persisted table pair at scale) and is cached
-    across micro-batches here; re-deriving the corpus per micro-batch
-    would be the O(corpus × batches) version of the round-2
-    stream-reader bug. Callers whose store outlives this drain (e.g.
-    the memoized session store in ``queries/llm``) pass
-    ``own_cache=False`` — the frames are already cached and must NOT be
-    unpersisted on exit."""
+    corpus-ingest time, a persisted table pair at scale); re-deriving the
+    corpus per micro-batch would be the O(corpus × batches) version of
+    the round-2 stream-reader bug. Its caching belongs to its owner (in
+    ``queries/llm``, the session-memoized store, which outlives this
+    drain): the drain neither caches nor unpersists it."""
     from pmp_analytics_spark.operators.dedup import (
         exploded_shingle_hashes,
         neardup_probe,
     )
-
-    ex_h = history_ex.cache() if own_cache else history_ex
-    keys_h = history_keys.cache() if own_cache else history_keys
 
     def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
         # The micro-batch's exploded stream has two consumers (band keys
@@ -72,8 +66,8 @@ def neardup_ingest_stream(
         ex_b = exploded_shingle_hashes(batch_df, text_col, id_col, shingle_k).cache()
         try:
             pairs = neardup_probe(
-                ex_h,
-                keys_h,
+                history_ex,
+                history_keys,
                 ex_b,
                 id_col,
                 threshold=threshold,
@@ -90,18 +84,13 @@ def neardup_ingest_stream(
         finally:
             ex_b.unpersist()
 
-    try:
-        q = (
-            batch_stream.writeStream.foreachBatch(probe_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if own_cache:
-            ex_h.unpersist()
-            keys_h.unpersist()
+    q = (
+        batch_stream.writeStream.foreachBatch(probe_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
 
 def quarantine_ingest_stream(

@@ -254,28 +254,3 @@ def test_driver_fast_path_skips_decimal_weights(spark):
     got = _ranks(pagerank(df, "src", "dst", "w"))
     assert set(got) == {0, 1}
     assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
-
-
-def test_clear_copurchase_edges_releases_memo(spark):
-    """The session-scoped co-purchase edge memo must expose a release
-    path (VERDICT r12 "What's wrong" #3): clear_copurchase_edges drops
-    every entry and a later call rebuilds (row-identical) instead of
-    reading a released frame."""
-    from pmp_analytics_spark.queries.extended import (
-        _COPURCHASE_EDGE_MEMO,
-        _copurchase_edges,
-        clear_copurchase_edges,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    first = _copurchase_edges(spark, sf)
-    key = (spark.sparkContext.applicationId, sf)
-    assert key in _COPURCHASE_EDGE_MEMO
-    n = first.count()
-    clear_copurchase_edges()
-    assert _COPURCHASE_EDGE_MEMO == {}
-    rebuilt = _copurchase_edges(spark, sf)
-    assert _COPURCHASE_EDGE_MEMO.get(key) is rebuilt
-    assert rebuilt.count() == n
-    clear_copurchase_edges()  # leave no memoized state behind for other tests
-    assert clear_copurchase_edges() is None  # idempotent on empty

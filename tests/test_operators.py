@@ -767,7 +767,8 @@ def test_neardup_ingest_stream_matches_batch_across_microbatches(spark, tmp_path
         time.sleep(1.1)  # distinct mtime seconds -> deterministic order
 
     ex_h = exploded_shingle_hashes(history, "text", "doc_id", 5)
-    keys_h = band_key_frame(minhash_signatures(ex_h, "doc_id", 16), "doc_id", 16, 4)
+    # the caller owns the store's caching; the drain only reads it
+    keys_h = band_key_frame(minhash_signatures(ex_h, "doc_id", 16), "doc_id", 16, 4).cache()
     sdf = (
         spark.readStream.schema(batch.schema)
         .option("maxFilesPerTrigger", "1")
@@ -776,10 +777,13 @@ def test_neardup_ingest_stream_matches_batch_across_microbatches(spark, tmp_path
         .parquet(str(src))
     )
     out_path = str(tmp_path / "pairs")
-    neardup_ingest_stream(
-        ex_h, keys_h, sdf, "text", "doc_id", out_path,
-        str(tmp_path / "ckpt"), threshold=0.5,
-    )
+    try:
+        neardup_ingest_stream(
+            ex_h, keys_h, sdf, "text", "doc_id", out_path,
+            str(tmp_path / "ckpt"), threshold=0.5,
+        )
+    finally:
+        keys_h.unpersist()
     out = spark.read.parquet(out_path)
     got = sorted((r["id_a"], r["id_b"], r["jaccard"]) for r in out.collect())
     assert got == expected
